@@ -16,7 +16,9 @@ The north-rule launch shape (BASELINE.json: "run via spark-submit
 --input/--output/--captions-out take any Spark-readable URI (s3://,
 hdfs://, ...). --stage-dir must be a DRIVER-VISIBLE filesystem path
 (local or a shared mount): StageStore's manifest/lock/metrics live on
-the driver's filesystem; the object-store/production form of the stage
+the launching host's filesystem, and jobs on different hosts sharing
+one mount are serialized only if flock works across hosts there (see
+StageStore._manifest_lock); the object-store/production form of the stage
 store is an Iceberg catalog (checkpoints.py module docstring), not
 reachable from this sandbox. An s3:// stage dir is rejected with a
 clear error instead of silently writing a bogus local directory.
@@ -71,7 +73,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--min-signature-agreement", type=float, default=None)
     p.add_argument("--psnr-edge-min-db", type=float, default=None)
     p.add_argument("--no-psnr-verify", action="store_true")
-    p.add_argument("--hot-band-threshold", type=int, default=None)
     p.add_argument("--max-pairs-per-band", type=int, default=None)
     return p
 
@@ -90,7 +91,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         for k, v in {
             "min_signature_agreement": args.min_signature_agreement,
             "psnr_edge_min_db": args.psnr_edge_min_db,
-            "hot_band_threshold": args.hot_band_threshold,
             "max_pairs_per_band": args.max_pairs_per_band,
         }.items()
         if v is not None
@@ -112,7 +112,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
             f"'{args.stage_dir}': StageStore's manifest/lock/metrics are "
             "local-FS (the production form is an Iceberg catalog — see "
             "sources/checkpoints.py). Use a shared mount for multi-driver "
-            "resume."
+            "resume (one where flock works across hosts, e.g. NFSv4)."
         )
 
     own_session = spark is None
@@ -148,14 +148,17 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
                 args.captions_out
             )
 
-        # per-stage seconds from the manifest: exactly one value per
-        # stage, the wall of the run that produced the COMMITTED
-        # snapshot (a resumed stage reports its original write time —
-        # the _metrics table would report the max over every historical
-        # generation instead)
+        # per-stage seconds from the manifest, for the stages this run's
+        # pipeline resolved (a reused --stage-dir may hold stages an
+        # earlier, differently configured run committed): exactly one
+        # value per stage, the wall of the run that produced the
+        # COMMITTED snapshot (a resumed stage reports its original write
+        # time — the _metrics table would report the max over every
+        # historical generation instead)
+        committed = store._manifest()["stages"]
         stage_secs = {
-            stage: round(entry.get("write_seconds", 0.0), 1)
-            for stage, entry in sorted(store._manifest()["stages"].items())
+            stage: round(committed[stage].get("write_seconds", 0.0), 1)
+            for stage in sorted(set(store.touched))
         }
         metrics = {
             "rows": row["rows"],

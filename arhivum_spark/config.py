@@ -75,36 +75,10 @@ class DedupConfig:
     # ~6 MB per thread. None leaves the session default untouched.
     parquet_batch_rows: int | None = 256
 
-    # skew handling: bands whose key frequency exceeds this get salted
-    hot_band_threshold: int = 64
-    # heavy-hitter detection sample fraction (1.0 = exact full count);
-    # sampled detection skips a rows*bands-sized shuffle and only needs to
-    # catch keys hot enough to matter (see lsh.salted_candidate_edges).
-    # NOTE the sampled-count floor of 3 makes the EFFECTIVE salting
-    # threshold ~ceil(3 / hot_detect_sample) members (~300 at the 0.01
-    # default), not hot_band_threshold itself — keys between the two are
-    # usually left unsalted, which is correctness-neutral (star edges still
-    # link them) and only relaxes per-partition size bounds.
-    hot_detect_sample: float = 0.01
-    salt_buckets: int = 16
-    max_pairs_per_band: int = 4096         # hard cap per (band,key) group
-    # star-verification retry (lsh.verify_edges_retry_pairs): failed-edge
-    # groups up to this size enumerate all member pairs (complete
-    # recovery, <= g^2/2 enumerations per bucket); larger groups fall
-    # back to one hub re-election (linear in rejects)
-    # verify_retry_enabled=False drops to plain verify_edges (single
-    # pass, no reject retry): cheaper by a near-constant per-job cost,
-    # at the measured price of hub-election split clusters (recall
-    # 0.9999x instead of exactly 1.0 — 10 splits at 2.4M, 137 at 4.8M;
-    # BENCH.md "splits diagnosed" section)
-    verify_retry_enabled: bool = True
-    retry_allpairs_max: int = 128
-    # retry pairs are pre-filtered by phash hamming INSIDE the self-join
-    # stage (before any shuffle or signature scoring): random colliders
-    # sit at ~32/64 bits, true near-dups at PSNR>=40 measured at 0-2, so
-    # this collapses the quadratic enumeration to ~true-pair volume.
-    # P(random pair <= 16) ~ 3e-5 keeps noise negligible.
-    retry_phash_max_hamming: int = 16
+    # degenerate-bucket valve (lsh.capped_members): a (band, key) bucket
+    # with more members than this keeps an expected max_pairs_per_band of
+    # them by deterministic hash draw, bounding the in-bucket verify kernel
+    max_pairs_per_band: int = 4096
 
     # connected components
     cc_max_iters: int = 50

@@ -475,28 +475,22 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     ngram: int = 3,
 ) -> DataFrame:
-    """MinHash+LSH near-dup document pairs with signature-agreement scores."""
+    """MinHash+LSH near-dup document pairs with signature-agreement scores:
+    the verified spanning forest of every LSH bucket (operators/lsh.py).
+    Near-dup pairs are emitted as such; three or more mutually near
+    documents sharing a bucket yield a spanning tree of them."""
     from arhivum_spark.operators.lsh import (
-        band_keys,
-        salted_candidate_edges,
-        verify_edges,
+        candidate_edges_compact,
+        verify_buckets,
     )
 
     # one materialization of the signature UDF — it feeds the band explode
-    # AND both sides of the verification join (3 consumers; without the
-    # checkpoint the Arrow kernel runs three times)
-    sigs = (
-        doc_minhash(df, cfg, id_col, text_col, ngram)
-        .withColumn("phash", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
+    # twice (bucket count + cap join) and the payload join; without the
+    # checkpoint the Arrow kernel runs three times
+    sigs = doc_minhash(df, cfg, id_col, text_col, ngram).localCheckpoint(
+        eager=False
     )
-    bands = band_keys(
-        sigs.select(F.col("id").alias("image_id"), "minhash"), cfg
-    )
-    cand = salted_candidate_edges(bands, cfg)
-    verified = verify_edges(
-        cand, sigs.select(F.col("id").alias("image_id"), "minhash", "phash"), cfg
-    )
+    verified = verify_buckets(candidate_edges_compact(sigs, cfg, id_col="id"), cfg)
     return verified.select(
         F.col("src").alias("id_a"), F.col("dst").alias("id_b"), "est_jaccard"
     )

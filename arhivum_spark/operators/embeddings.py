@@ -2,21 +2,26 @@
 
 Brute-force cosine is the exact baseline (and the DuckDB-oracle-checkable
 query); random-hyperplane LSH bucketing is the 10^12-row scale path — the
-same blocking-then-verify shape as the image MinHash pipeline
-(operators/lsh.py), with sign-bit signatures instead of MinHash bands.
+image MinHash pipeline's LSH core (operators/lsh.py: one cap valve, one
+row per multi-member bucket, a numpy kernel per Arrow batch of buckets),
+with sign-bit signatures instead of MinHash bands and a cosine kernel
+instead of signature agreement.
 
-All vector math is JVM-side (`zip_with`/`aggregate` over array<double>) —
-no Python in the hot path. Hyperplane signatures are computed with array
-intrinsics from a broadcast literal plane matrix (seeded, so both the test
-oracle and the job derive identical buckets).
+The exact paths keep vector math JVM-side (`zip_with`/`aggregate` over
+array<double>). Hyperplane planes are seeded, so the test oracle and the
+job derive identical buckets.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from arhivum_spark.operators.lsh import bucket_rows, capped_members, flatten
 
 
 def _dot(a: str | Column, b: str | Column) -> Column:
@@ -64,10 +69,12 @@ def _rhp_capped_buckets(
     payload: bool,
 ):
     """Shared preamble of every rhp_* operator: dim probe, with_norm
-    base, multi-table bucketing, cap valve. Returns (capped, id_type) —
-    capped is None for an empty/all-null corpus. payload=True re-joins
-    (vecd, norm) onto the capped bucket rows for in-bucket verification.
-    EAGER (dim probe + _cap_buckets' max-bucket probe)."""
+    base, multi-table bucketing, and the LSH core's cap valve
+    (lsh.capped_members). Returns (capped, id_type) — capped is None for
+    an empty/all-null corpus. payload=False gives capped member rows
+    (table, bucket, _cid); payload=True gives one row per bucket
+    (table, bucket, ids, vecd, norm) for in-bucket verification
+    (lsh.bucket_rows). EAGER (dim probe only)."""
     id_type = dict(df.dtypes)[id_col]
     dim = _probe_dim(df, vec_col)
     if dim is None:
@@ -75,13 +82,39 @@ def _rhp_capped_buckets(
     base = with_norm(df, vec_col).select(
         F.col(id_col).alias("_cid"), "vecd", "norm"
     )
+    # two consumers (the valve's bucket count + its cap join) — pin the
+    # signature-UDF output once or the Arrow kernel runs twice
     bucketed = rhp_table_buckets(
         base.select("_cid", "vecd"), dim, nbits, n_tables, seed
-    )
-    capped = _cap_buckets(bucketed, max_bucket_members)
+    ).localCheckpoint(eager=False)
+    keys = ["table", "bucket"]
+    capped = capped_members(bucketed, keys, "_cid", max_bucket_members)
     if payload:
-        capped = capped.join(base, "_cid")
+        capped = bucket_rows(capped, base, keys, "_cid", "_cid", ["vecd", "norm"])
     return capped, id_type
+
+
+def _map_buckets(rows: DataFrame, per_bucket, schema: str) -> DataFrame:
+    """Runs per_bucket over every bucket row (ids ascending, vecd, norm),
+    one mapInPandas call per Arrow batch of them. per_bucket(ids, x, norm)
+    -> {output column: array}, the columns of `schema`."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            offs, ids = flatten(pdf["ids"])
+            x = np.stack(flatten(pdf["vecd"])[1]).astype(np.float64)
+            nrm = flatten(pdf["norm"])[1].astype(np.float64)
+            parts = [
+                per_bucket(ids[a:b], x[a:b], nrm[a:b])
+                for a, b in zip(offs[:-1], offs[1:])
+            ]
+            yield pd.DataFrame(
+                {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+            )
+
+    return rows.select("ids", "vecd", "norm").mapInPandas(run, schema)
 
 
 def cosine_topk(
@@ -212,55 +245,6 @@ def rhp_table_buckets(
     )
 
 
-def _cap_buckets(bucketed: DataFrame, cap: int) -> DataFrame:
-    """Degenerate-bucket valve (the embedding twin of the image LSH
-    max_pairs_per_band, operators/lsh.py:166-188): buckets with more than
-    `cap` members keep an EXPECTED `cap` of them by deterministic hash
-    draw, so a pathological cohort (zero vectors, boilerplate embeddings)
-    that lands 10^9 rows in one (table, bucket) contributes O(cap^2)
-    candidate pairs instead of O(n^2). Singleton buckets are dropped
-    map-side (they can't produce pairs). The bucket-size frame has at most
-    n_tables * 2^nbits rows — always broadcastable.
-
-    Both paths drop singleton buckets and feed IDENTICAL candidate frames;
-    the un-skewed fast path (no bucket over the cap — the common case)
-    skips only the cap arithmetic, filtering singletons with a broadcast
-    left-semi join (map-side, fused into the consumer stage — no extra
-    pass over the bucketed frame, and no `_bn` column). The skewed path
-    adds `_bn` (pre-cap bucket population); callers must not rely on it
-    (`df.drop("_bn")` is a no-op when absent).
-
-    EAGER: the max-bucket probe runs a Spark job at call time (it also
-    materializes the lazy localCheckpoint below), so merely CONSTRUCTING
-    a plan through this valve computes the full signature/bucketing pass.
-    Public callers document this."""
-    # two consumers (size count + the join below) — pin the signature-UDF
-    # output once or the Arrow kernel runs twice; the max-size probe below
-    # materializes the lazy checkpoint, so the main query reads the pinned
-    # frame either way
-    bucketed = bucketed.localCheckpoint(eager=False)
-    sizes = bucketed.groupBy("table", "bucket").agg(F.count("*").alias("_bn"))
-    # sizes has <= n_tables * 2^nbits rows — the probe is one scalar
-    max_bn = sizes.agg(F.max("_bn")).first()[0]
-    multi = sizes.filter(F.col("_bn") >= 2)
-    if max_bn is None or max_bn <= cap:
-        return bucketed.join(
-            F.broadcast(multi.select("table", "bucket")),
-            ["table", "bucket"],
-            "left_semi",
-        )
-    return bucketed.join(F.broadcast(multi), ["table", "bucket"]).filter(
-        (F.col("_bn") <= cap)
-        | (
-            F.pmod(
-                F.xxhash64("_cid", F.col("table"), F.col("bucket")),
-                F.col("_bn"),
-            )
-            < cap
-        )
-    )
-
-
 def rhp_bucket_candidates(
     df: DataFrame,
     nbits: int = 8,
@@ -279,11 +263,9 @@ def rhp_bucket_candidates(
     its payload exactly once). Bucket population is ~n/2^nbits per table;
     nbits tunes the blocking factor against recall. Buckets above
     `max_bucket_members` are down-sampled by deterministic draw
-    (_cap_buckets) — the O(k^2)-per-bucket blowup valve.
+    (lsh.capped_members) — the O(k^2)-per-bucket blowup valve.
 
-    EAGER: constructing this plan runs Spark jobs (the dim probe and
-    _cap_buckets' max-bucket-size probe, which materializes the full
-    signature/bucketing pass) — do not build it speculatively.
+    EAGER: constructing this plan runs the dim probe (one Spark job).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -319,20 +301,21 @@ def rhp_neardup_pairs(
     small-scale oracle) but blocked by the (table, bucket) LSH keys; recall
     depends on (nbits, n_tables) vs the threshold's angle — the registered
     query pins a config measured at recall 1.0 on its corpus
-    (tests/test_oracle_guard.py re-measures it).
+    (tests/test_round3_ops.py::test_recall_guard_emb_neardup re-measures
+    it).
 
-    Scale shape (round-3 rewrite): verification happens INSIDE each
-    bucket via one applyInPandas einsum over the bucket's member matrix,
-    and only the surviving (id_a, id_b, cosine) triples leave the bucket —
-    cross-table dedup then runs over bare ids. The previous plan deduped
-    candidate ids first and re-joined both 512-byte vectors onto every
-    pair (at sf0.1 a ~12 GB shuffle for 12.5M pairs); now vectors ride the
-    bucket explode exactly once (n * n_tables rows) and no pair ever
-    carries a payload. Degenerate buckets are capped by _cap_buckets, so
-    per-task work is bounded by max_bucket_members^2 regardless of skew.
+    Scale shape: verification happens INSIDE each bucket — one row per
+    capped multi-member bucket (lsh.bucket_rows), an einsum over the
+    bucket's member matrix per bucket, one mapInPandas call per Arrow
+    batch of buckets — and only the surviving (id_a, id_b, cosine)
+    triples leave the bucket; cross-table dedup then runs over bare ids.
+    Vectors join onto multi-member bucket rows only and no pair ever
+    carries a payload (a plan that re-joins both 512-byte vectors onto
+    every candidate pair shuffled ~12 GB for 12.5M pairs at sf0.1).
+    Degenerate buckets are capped by lsh.capped_members, so per-task work
+    is bounded by max_bucket_members^2 regardless of skew.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs the dim probe (one Spark job).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -343,10 +326,7 @@ def rhp_neardup_pairs(
             [], f"id_a {id_type}, id_b {id_type}, cosine double"
         )
 
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["_cid"].to_numpy()
-        x = np.array(pdf["vecd"].tolist(), dtype=np.float64)
-        nrm = pdf["norm"].to_numpy(dtype=np.float64)
+    def per_bucket(ids, x, nrm):
         m = len(ids)
         out_a, out_b, out_c = [], [], []
         # row-chunked m x m cosine: keeps the score block cache-resident
@@ -359,28 +339,22 @@ def rhp_neardup_pairs(
                 nrm[i0:i1], nrm
             )
             bi, bj = np.nonzero(_round_half_up6(block) >= threshold)
-            keep = (bi + i0) < bj  # upper triangle only, no self-pairs
+            # upper triangle only, no self-pairs; ids ascend, so
+            # id_a < id_b
+            keep = (bi + i0) < bj
             bi, bj = bi[keep], bj[keep]
-            ia, ib = ids[bi + i0], ids[bj]
-            swap = ia > ib
-            out_a.append(np.where(swap, ib, ia))
-            out_b.append(np.where(swap, ia, ib))
+            out_a.append(ids[bi + i0])
+            out_b.append(ids[bj])
             out_c.append(_round_half_up6(block[bi, bj]))
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        return {
+            "id_a": np.concatenate(out_a),
+            "id_b": np.concatenate(out_b),
+            "cosine": np.concatenate(out_c),
+        }
 
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
-    return (
-        capped.groupBy("table", "bucket")
-        .applyInPandas(per_bucket, schema=schema)
-        .dropDuplicates(["id_a", "id_b"])
+    return _map_buckets(capped, per_bucket, schema).dropDuplicates(
+        ["id_a", "id_b"]
     )
 
 
@@ -400,15 +374,14 @@ def rhp_star_neardup_edges(
     anyway, so full within-bucket pair enumeration is wasted work — within
     each (table, bucket) this emits only (hub = min id, member) edges that
     clear the cosine threshold: O(m) per bucket instead of O(m^2), one
-    einsum row per bucket. Same trade as the image pipeline's star edges
-    (operators/lsh.py): clusters whose members all clear the threshold
-    against the hub are fully restored by CC; borderline members linked
-    only member-to-member can be missed, so use it for SemDeDup-style
-    keep/drop where the threshold is well inside the cluster diameter.
+    einsum row per bucket, driven over bucket rows like rhp_neardup_pairs.
+    Clusters whose members all clear the threshold against the hub are
+    fully restored by CC; borderline members linked only member-to-member
+    can be missed, so use it for SemDeDup-style keep/drop where the
+    threshold is well inside the cluster diameter.
     Output: (src, dst, cosine) with src = bucket hub.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs the dim probe (one Spark job).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -419,28 +392,20 @@ def rhp_star_neardup_edges(
             [], f"src {id_type}, dst {id_type}, cosine double"
         )
 
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf["_cid"].to_numpy().argsort(kind="stable")
-        ids = pdf["_cid"].to_numpy()[order]
-        x = np.array(pdf["vecd"].tolist(), dtype=np.float64)[order]
-        nrm = pdf["norm"].to_numpy(dtype=np.float64)[order]
+    def per_bucket(ids, x, nrm):
         cos = _round_half_up6(
             np.einsum("d,jd->j", x[0], x[1:]) / (nrm[0] * nrm[1:])
         )
         keep = cos >= threshold
-        return pd.DataFrame(
-            {
-                "src": np.repeat(ids[0], int(keep.sum())),
-                "dst": ids[1:][keep],
-                "cosine": cos[keep],
-            }
-        )
+        return {
+            "src": ids[:1].repeat(int(keep.sum())),
+            "dst": ids[1:][keep],
+            "cosine": cos[keep],
+        }
 
     schema = f"src {id_type}, dst {id_type}, cosine double"
-    return (
-        capped.groupBy("table", "bucket")
-        .applyInPandas(per_bucket, schema=schema)
-        .dropDuplicates(["src", "dst"])
+    return _map_buckets(capped, per_bucket, schema).dropDuplicates(
+        ["src", "dst"]
     )
 
 
@@ -491,7 +456,7 @@ def rhp_ann_topk(
     are broadcast; the crossJoin of cosine_topk becomes an equi-join on
     (table, bucket). Recall is tunable via (nbits, n_tables) — tested
     against the exact oracle in tests/test_training_ops.py. Buckets above
-    `max_bucket_members` are down-sampled by _cap_buckets — in a
+    `max_bucket_members` are down-sampled by lsh.capped_members — in a
     degenerately hot bucket both corpus and query membership degrade
     gracefully (other tables still contribute) instead of the join
     exploding quadratically.
@@ -505,12 +470,16 @@ def rhp_ann_topk(
     use the exact `cosine_topk`; ivf_probe_topk (nprobe>=1 cells per
     query) never drops a query and is the engine's covering-search path.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs Spark jobs: the dim probe, and the
+    bucketing and cap-valve stages of the pinned candidate frame (with
+    AQE on, taking the lazy localCheckpoint of a plan with shuffles runs
+    them).
     """
-    dim = _probe_dim(df, vec_col)
-    if dim is None:
-        id_type = dict(df.dtypes)[id_col]
+    capped, id_type = _rhp_capped_buckets(
+        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
+        payload=False,
+    )
+    if capped is None:
         return df.sparkSession.createDataFrame(
             [],
             f"query_id {id_type}, neighbor_id {id_type}, "
@@ -521,15 +490,9 @@ def rhp_ann_topk(
     )
     # two consumers below (query projection + candidate side) — pin once
     # or the base scan + payload join run twice
-    bucketed = base.join(
-        _cap_buckets(
-            rhp_table_buckets(base, dim, nbits, n_tables, seed),
-            max_bucket_members,
-        ).drop("_bn"),
-        "_cid",
-    ).select("_cid", "vecd", "norm", "table", "bucket").localCheckpoint(
-        eager=False
-    )
+    bucketed = base.join(capped, "_cid").select(
+        "_cid", "vecd", "norm", "table", "bucket"
+    ).localCheckpoint(eager=False)
     q = (
         bucketed.join(query_ids.select(F.col(id_col).alias("_cid")), "_cid")
         .select(

@@ -1,40 +1,53 @@
-"""LSH banding, hot-band salting, and candidate-edge generation.
+"""LSH banding and the one bucket-verify core.
 
 Generalizes the reference's hash-equality probe join (J1,
 ScannedFileRepository.findBySha256) to near-duplicates: the MinHash
 signature is split into `bands` bands of `rows_per_band` values; two images
 that share any band key are candidates (P[share a band] = 1-(1-J^r)^b).
 
-Scale design (the parts Catalyst can't do for us — SURVEY.md §4):
+The core has three steps, shared by the image stage s3, document MinHash
+(dedup_text.minhash_lsh_pairs) and, through the first two, the embedding
+LSH operators (embeddings.rhp_*):
 
-- **Exact-dedup first**: byte-identical rows are collapsed to one
-  representative BEFORE banding (the reference's skip-expensive-work-for-
-  duplicates optimization, ScanCommand.java:342-353, applied to the whole
-  near-dup stage). Degenerate cohorts (all-black images) collapse from
-  billions of rows to a handful of distinct contents.
-- **Star edges, not cliques**: within a (band, key, salt) bucket we emit
-  (hub=min_id, member) edges via a ranking window — O(k) edges per bucket
-  instead of O(k^2) pairs. Connected components restores the full cluster.
-  No collect_list, no quadratic pair blowup on hot bands.
-- **Two-pass hot-key salting**: band-key frequencies are counted, keys above
-  `hot_band_threshold` get a salt = hash(image_id) % salt_buckets appended,
-  splitting a hot bucket's window into bounded partitions. Buckets of a
-  salted key are re-linked by CC through the exact-dup and multi-band
-  overlap edges (and a per-key hub chain emitted from the count pass).
-- AQE skew-join stays on for the verification join (session.py).
+1. **Membership behind one cap valve** (`capped_members`): the band
+   explode (`band_keys`) is counted per (band, key) with a map-side
+   combined aggregate; only buckets with >= 2 members survive, and a
+   bucket above `max_pairs_per_band` keeps an expected `cap` members by
+   deterministic hash draw (SURVEY §4 degenerate-content valve). Singleton
+   buckets, the overwhelming majority, never move past the count.
+2. **Bucket rows** (`bucket_rows`): the payload (MinHash arrays) is joined
+   onto the surviving member rows only — never onto the rows x bands
+   explode (*Hyper Dimension Shuffle*: payload travels only with rows that
+   can pair) — and grouped into one row per bucket, members ordered by id.
+3. **One verify kernel per Arrow batch** (`verify_buckets`): mapInPandas
+   hands the kernel a batch of bucket rows — one Python call per batch, not
+   one per bucket (an applyInPandas group costs ~1.5 ms) — and
+   `spanning_forest` emits, for every bucket, a spanning forest of the
+   pairs whose full-signature agreement clears `min_signature_agreement`.
+   Two members share a tree exactly when verified pairs inside the bucket
+   connect them, so no member is orphaned by which id happens to be
+   smallest; connected components downstream restores the clusters.
+
+Exact-dedup runs first: byte-identical rows collapse to one representative
+BEFORE banding (the reference's skip-expensive-work-for-duplicates
+optimization, ScanCommand.java:342-353), so degenerate cohorts (all-black
+images) enter the bucket stage as a handful of distinct contents.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from arhivum_spark.config import DedupConfig
 
 
 def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> DataFrame:
-    """Explode each signature into (image_id, band, key) — JVM-side only.
+    """Explode each signature into (id_col, band, key) — JVM-side only.
 
     key = xxhash64 of the band's signature slice (plus band index so
     identical slices in different bands don't collide). The key MUST be
@@ -42,15 +55,11 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
     birthday-collide at an n^2 rate — ~690k falsely-merged buckets at
     2.4M images (76.8M band values), and ~7,400 garbage occupants in
     EVERY bucket at the 10^12-row north-rule scale (3.2e13 values into
-    2^32), which would drown the star construction. At 2^64 the 2.4M
-    load expects ~1e-4 colliding keys. (Measured at 2.4M, hash
-    collisions were NOT the split-cluster source — that is same-slice
-    concentration; see verify_edges_retry_pairs — but 64-bit keys are a
-    survival requirement at the target scale.)
+    2^32). At 2^64 the 2.4M load expects ~1e-4 colliding keys.
 
-    The id column that rides through the explode and both downstream
-    shuffles should be a LONG, not a string: at rows x bands scale every
-    byte of the key is shuffle traffic (see candidate_edges_compact).
+    The id column that rides through the explode and the bucket count
+    should be a LONG, not a string: at rows x bands scale every byte of
+    the key is shuffle traffic (see candidate_edges_compact).
     """
     r = cfg.rows_per_band
     bands_arr = F.transform(
@@ -58,450 +67,192 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
         lambda b: F.xxhash64(F.slice(F.col("minhash"), b * r + 1, r), b),
     )
     return sig_df.select(
-        F.col(id_col).alias("image_id"),
-        F.posexplode(bands_arr).alias("band", "key"),
+        F.col(id_col), F.posexplode(bands_arr).alias("band", "key")
     )
+
+
+def capped_members(
+    members: DataFrame, bucket_cols: list[str], id_col: str, cap: int
+) -> DataFrame:
+    """The cap valve: (bucket_cols..., id_col) membership rows -> the rows
+    of buckets with >= 2 members, each bucket above `cap` members
+    down-sampled to an expected `cap` of them by deterministic hash draw.
+
+    The bucket count is a map-side combined aggregate, so a hot key never
+    funnels into one partition and no bucket's member list is ever
+    assembled before the cap applies. A bucket this big after exact dedup
+    means pathological near-identical variety (zero vectors, boilerplate
+    content); sampled-out members may cost recall there, which is the
+    documented trade. Lazy: no Spark job runs until the result is used."""
+    sizes = (
+        members.groupBy(*bucket_cols)
+        .agg(F.count("*").alias("_bn"))
+        .filter(F.col("_bn") >= 2)
+    )
+    draw = F.pmod(F.xxhash64(id_col, *bucket_cols), F.col("_bn"))
+    return (
+        members.join(sizes, bucket_cols)
+        .filter((F.col("_bn") <= cap) | (draw < cap))
+        .drop("_bn")
+    )
+
+
+def bucket_rows(
+    members: DataFrame,
+    payload: DataFrame,
+    bucket_cols: list[str],
+    join_col: str,
+    id_col: str,
+    cols: list[str],
+) -> DataFrame:
+    """Capped member rows + payload -> one row per bucket: bucket_cols,
+    `ids` (array, ascending) and one aligned array per payload column.
+
+    The payload joins onto member rows only. Buckets the cap left with a
+    single member are dropped."""
+    m = (
+        members.join(payload, join_col)
+        .groupBy(*bucket_cols)
+        .agg(F.sort_array(F.collect_list(F.struct(id_col, *cols))).alias("_m"))
+        .filter(F.size("_m") >= 2)
+    )
+    return m.select(
+        *bucket_cols,
+        F.col(f"_m.{id_col}").alias("ids"),
+        *[F.col(f"_m.{c}").alias(c) for c in cols],
+    )
+
+
+def flatten(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """A non-empty bucket-row array column -> (offsets, concatenated member
+    values): bucket b's members are values[offsets[b]:offsets[b + 1]]."""
+    arrs = col.to_numpy()
+    offs = np.concatenate(([0], np.cumsum([len(a) for a in arrs])))
+    return offs, np.concatenate(arrs)
 
 
 def candidate_edges_compact(
     sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id"
 ) -> DataFrame:
-    """band explode -> salted star edges, with a compact long surrogate id.
+    """Candidate buckets: one row (band, key, ids, minhash) per capped
+    (band, key) bucket with >= 2 members, members ordered by id.
 
-    The 14+-byte string ids would dominate the (rows x bands) explode and
-    both window shuffles; a long surrogate (xxhash64 of the id — collision
-    odds n^2/2^65) cuts shuffle bytes ~2x. Output edges are mapped back to
-    the original id via one broadcast-friendly dictionary join.
+    The explode and the bucket count carry a compact long surrogate
+    (xxhash64 of the id — collision odds n^2/2^65) instead of the 14+-byte
+    string id, cutting their shuffle bytes ~2x; the original id and the
+    MinHash ride along only on the payload join of step 2. (The traced
+    benchmark, dedup_bench, counts this function's output as s3's
+    candidates.)
     """
     keyed = sig_df.select(
         F.xxhash64(F.col(id_col)).alias("_iid"), F.col(id_col), "minhash"
     )
-    iid_map = keyed.select("_iid", F.col(id_col))
-    bands = band_keys(
-        keyed.select(F.col("_iid").alias("image_id"), "minhash"), cfg
+    members = capped_members(
+        band_keys(keyed.select("_iid", "minhash"), cfg, id_col="_iid"),
+        ["band", "key"],
+        "_iid",
+        cfg.max_pairs_per_band,
     )
-    edges = salted_candidate_edges(bands, cfg)
-    src_map = iid_map.select(
-        F.col("_iid").alias("src"), F.col(id_col).alias("src_id")
-    )
-    dst_map = iid_map.select(
-        F.col("_iid").alias("dst"), F.col(id_col).alias("dst_id")
-    )
-    return (
-        edges.join(src_map, "src")
-        .join(dst_map, "dst")
-        .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
+    return bucket_rows(
+        members, keyed, ["band", "key"], "_iid", id_col, ["minhash"]
     )
 
 
-def salted_candidate_edges(
-    bands: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """(band,key) buckets -> star candidate edges (src < dst), salt-split.
+def _agreement(sig: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Count of equal signature positions for member pairs (i, j), in
+    row chunks so the gathered pair blocks stay small at the bucket cap."""
+    out = np.empty(len(i), dtype=np.int64)
+    step = 1 << 14
+    for a in range(0, len(i), step):
+        b = a + step
+        out[a:b] = np.count_nonzero(sig[i[a:b]] == sig[j[a:b]], axis=1)
+    return out
 
-    Two passes:
-      1. count band-key frequencies; keys above hot_band_threshold are 'hot'
-      2. hot keys get per-row salt; a window per (band, key, salt) emits
-         hub->member edges; for hot keys an extra bucket-hub chain edge set
-         links the salt buckets of the same (band, key) together.
+
+def spanning_forest(
+    offs: np.ndarray, sig: np.ndarray, threshold: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Verified spanning forest of every bucket in a batch.
+
+    offs: (B+1,) member offsets; members of bucket b are rows
+    offs[b]:offs[b+1] of sig, ordered by id. sig: (M, P) signatures.
+    Returns member-index arrays (i, j) with i < j in the same bucket, and
+    est = agreement(i, j) / P >= threshold for each emitted edge.
+
+    Round r handles the r-th member of every bucket at once: it is scored
+    against the later members of its bucket that are NOT already in its
+    tree, and links one passing member of each other tree it reaches.
+    Every verified pair (i, j) is either scored at row i or already
+    connected by then, so trees are exactly the connected components of
+    the verified pairs. A bucket retires once no later member sits outside
+    the current row's tree; a bucket whose members all verify against its
+    first member therefore costs one row of P-wide comparisons.
+    BLAS-free numpy (nested-thread rule, docs/ENGINEERING_NOTES.md).
     """
-    # pass 1: hot-band detection on a SAMPLE. Band keys are mostly unique
-    # (near-dup pairs are rare), so a full groupBy(band,key) count shuffles
-    # nearly all rows x bands — a 19M-row shuffle at 600k images just to
-    # find a handful of heavy hitters. A 1% sample finds every key above
-    # ~100x the per-row sample odds; moderately-populated keys that slip
-    # through are harmless (a few hundred rows in one window partition),
-    # and salting a falsely-flagged key is also harmless (the hub chain
-    # reconnects its buckets). A window count over raw (band,key) would
-    # funnel a whole hot band into one partition — never do that.
-    frac = cfg.hot_detect_sample
-    if frac < 1.0:
-        sample_threshold = max(3.0, cfg.hot_band_threshold * frac)
-        counts = (
-            bands.sample(fraction=frac, seed=cfg.minhash_seed)
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("cnt"))
-        )
-        hot = counts.filter(F.col("cnt") >= sample_threshold).select(
-            "band", "key", F.lit(True).alias("is_hot")
-        )
-    else:
-        counts = bands.groupBy("band", "key").agg(F.count("*").alias("cnt"))
-        hot = counts.filter(F.col("cnt") > cfg.hot_band_threshold).select(
-            "band", "key", F.lit(True).alias("is_hot")
-        )
-    # pass 2: salt hot keys; localCheckpoint so edges + hub chain reuse one
-    # materialization instead of re-deriving the band explode three times
-    salted = (
-        bands.join(F.broadcast(hot), ["band", "key"], "left")
-        .withColumn(
-            "cnt",
-            F.when(F.col("is_hot").isNotNull(), cfg.hot_band_threshold + 1)
-            .otherwise(F.lit(0)),
-        )
-        .withColumn(
-            # the salt hash MUST mix in (band, key), not just the id: a
-            # per-id-only salt gives a true pair the SAME split/co-salt
-            # outcome in every hot bucket they share (P[split everywhere]
-            # = 1 - 1/salt_buckets, correlated), whereas per-(band,key)
-            # salting makes the draws independent — P[co-salted in at
-            # least one of k shared hot bands] = 1-(1-1/s)^k. Residual
-            # recall gap (documented): a true pair whose shared band keys
-            # are ALL hot and that loses every per-band salt draw AND
-            # every salt bucket's hub election; the hub chain only links
-            # buckets whose hubs verify against each other (trivially
-            # true for the identical-content cohorts that dominate real
-            # hot keys).
-            "salt",
-            F.when(
-                F.col("is_hot").isNotNull(),
-                F.pmod(
-                    F.xxhash64("image_id", F.col("band"), F.col("key")),
-                    F.lit(cfg.salt_buckets),
-                ),
-            ).otherwise(F.lit(0)),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Star edges WITHOUT a ranking window (round-1's largest non-scaling
-    # stage: the window sort-shuffled the whole rows x bands explode).
-    # Instead: groupBy(min, count) — partial-aggregated map-side, so hot
-    # keys never funnel into one partition — then an INNER join of the
-    # explode against only the buckets with >= 2 members. Near-dup buckets
-    # are rare, so that hub set is tiny and AQE turns the join into a
-    # broadcast: the big side is never shuffled at all. (If hubs outgrow
-    # broadcast at 10^12, the salt key still bounds the sort-merge
-    # partitions — same skew guarantee as before.)
-    hub_agg = salted.groupBy("band", "key", "salt").agg(
-        F.min("image_id").alias("hub"),
-        F.count("*").alias("bucket_n"),
-        F.max("cnt").alias("_cnt"),
-    )
-    # Two consumers (star join + hot-key chain) — materialize ONCE, and
-    # only the buckets either can use (>=2 members or hot): singleton
-    # non-hot buckets, the overwhelming majority, are dropped before the
-    # checkpoint so the stored frame is tiny. Without this the rows x
-    # bands groupBy runs twice (measured: s3 doubled at local[2]).
-    hub_small = hub_agg.filter(
-        (F.col("bucket_n") >= 2) | (F.col("_cnt") > cfg.hot_band_threshold)
-    ).localCheckpoint(eager=False)
-    pair_hubs = hub_small.filter(F.col("bucket_n") >= 2).select(
-        "band", "key", "salt", "hub", "bucket_n"
-    )
-    # max_pairs_per_band (SURVEY §4 degenerate-content valve): a bucket
-    # with more than `cap` members emits only ~cap star edges — members are
-    # kept by a deterministic hash draw (pmod(h, bucket_n) < cap keeps an
-    # expected cap of them). Exact-dedup-first already collapsed identical
-    # content, so a bucket this big means pathological near-identical
-    # variety; sampled-out members may cost recall there, which is the
-    # documented trade. Per (band, key) the bound is salt_buckets * cap.
-    cap = cfg.max_pairs_per_band
-    edges = (
-        salted.join(pair_hubs, ["band", "key", "salt"])
-        .filter(F.col("image_id") != F.col("hub"))
-        .filter(
-            (F.col("bucket_n") <= cap)
-            | (
-                F.pmod(
-                    F.xxhash64("image_id", F.col("band"), F.col("key")),
-                    F.col("bucket_n"),
-                )
-                < cap
+    sizes = np.diff(offs)
+    n_members, n_perm = sig.shape
+    lab = np.arange(n_members)  # tree label: a member index of the tree
+    live = sizes >= 2
+    out_i, out_j, out_e = [], [], []
+    r = 0
+    while True:
+        live &= sizes > r + 1
+        buckets = np.flatnonzero(live)
+        if not len(buckets):
+            break
+        rows = offs[buckets] + r
+        n = offs[buckets + 1] - rows - 1  # >= 1 for every live bucket
+        starts = np.cumsum(n) - n
+        i = np.repeat(rows, n)
+        j = i + 1 + np.arange(n.sum()) - np.repeat(starts, n)
+        outside = lab[j] != lab[i]
+        # no later member outside this row's tree: the bucket is one tree
+        # from here on
+        live[buckets[~np.logical_or.reduceat(outside, starts)]] = False
+        i, j = i[outside], j[outside]
+        est = _agreement(sig, i, j) / n_perm
+        ok = est >= threshold
+        i, j, est = i[ok], j[ok], est[ok]
+        # one edge per other tree reached: its lowest-id passing member
+        _, first = np.unique(lab[j], return_index=True)
+        i, j, est = i[first], j[first], est[first]
+        remap = np.arange(n_members)
+        remap[lab[j]] = lab[i]
+        lab = remap[lab]
+        out_i.append(i)
+        out_j.append(j)
+        out_e.append(est)
+        r += 1
+    if not out_i:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_e)
+
+
+def verify_buckets(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Bucket rows (ids, minhash) -> distinct verified edges
+    (src, dst, est_jaccard), src < dst.
+
+    est_jaccard is the fraction of equal MinHash positions of that pair
+    (unbiased Jaccard estimate, the true-Jaccard generalization of the
+    reference's calculateSimilarity proxy); every edge clears
+    cfg.min_signature_agreement. A pair sharing several bands is emitted
+    once."""
+    id_t = buckets.schema["ids"].dataType.elementType.simpleString()
+    threshold = cfg.min_signature_agreement
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            offs, ids = flatten(pdf["ids"])
+            sig = np.stack(flatten(pdf["minhash"])[1])
+            i, j, est = spanning_forest(offs, sig, threshold)
+            yield pd.DataFrame(
+                {"src": ids[i], "dst": ids[j], "est_jaccard": est}
             )
-        )
-        .select(F.col("hub").alias("src"), F.col("image_id").alias("dst"))
-    )
-    # link salt buckets of the same hot (band,key): min bucket-hub per key
-    # joins every other bucket hub (replaces the per-key ordering window —
-    # bucket_hubs is tiny, one broadcastable self-aggregation)
-    bucket_hubs = hub_small.filter(F.col("_cnt") > cfg.hot_band_threshold)
-    key_hubs = bucket_hubs.groupBy("band", "key").agg(
-        F.min("hub").alias("key_hub")
-    )
-    hub_chain = (
-        bucket_hubs.join(key_hubs, ["band", "key"])
-        .filter(F.col("hub") != F.col("key_hub"))
-        .select(F.col("key_hub").alias("src"), F.col("hub").alias("dst"))
-    )
-    return edges.unionByName(hub_chain).distinct()
 
-
-def score_edges(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-    _keep_member_phash: bool = False,
-) -> DataFrame:
-    """Attach est_jaccard + phash_hamming to every candidate edge.
-
-    Agreement = fraction of equal MinHash positions (unbiased Jaccard
-    estimate, the true-Jaccard generalization of the reference's
-    calculateSimilarity proxy). Computed with zip_with/aggregate — stays in
-    the JVM, no Python. No filtering: callers split pass/fail themselves
-    (verify_edges_retry_pairs needs BOTH sides from one scoring pass).
-    """
-    sigs = sig_df.select(
-        F.col(id_col).alias("_vid"),
-        F.col("minhash").alias("_mh"),
-        F.col("phash").alias("_ph"),
-    )
-    a = sigs.select(
-        F.col("_vid").alias("src"),
-        F.col("_mh").alias("mh_a"),
-        F.col("_ph").alias("ph_a"),
-    )
-    b = sigs.select(
-        F.col("_vid").alias("dst"),
-        F.col("_mh").alias("mh_b"),
-        F.col("_ph").alias("ph_b"),
-    )
-    agree = F.aggregate(
-        F.zip_with("mh_a", "mh_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    out_cols = ["src", "dst", "est_jaccard", "phash_hamming"]
-    if _keep_member_phash:
-        out_cols.append("ph_b")
     return (
-        edges.join(a, "src")
-        .join(b, "dst")
-        .withColumn("est_jaccard", agree / F.lit(cfg.num_perm))
-        .withColumn(
-            "phash_hamming",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))),
-        )
-        .select(*out_cols)
+        buckets.select("ids", "minhash")
+        .mapInPandas(kernel, f"src {id_t}, dst {id_t}, est_jaccard double")
+        .dropDuplicates(["src", "dst"])
     )
-
-
-def verify_edges(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Keep candidate edges whose full-signature agreement >= threshold."""
-    return score_edges(edges, sig_df, cfg, id_col=id_col).filter(
-        F.col("est_jaccard") >= cfg.min_signature_agreement
-    )
-
-
-def verify_edges_rehub(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """verify_edges plus one hub re-election pass over its REJECTS.
-
-    The star construction elects hub = min(id) per bucket, and
-    verification filters (hub, member) edges independently. When the
-    min-id member of a bucket is a FOREIGN one-band collider, both edges
-    to the true members fail signature agreement and the true pair loses
-    that bucket's connectivity entirely — even though both members sit in
-    the bucket. The miss probability grows with n (collider occupancy of
-    near-dup buckets), which is exactly the superlinear split-cluster
-    growth measured at 2.4M/4.8M images (BENCH.md): every split was a
-    {base, reenc} pair orphaned by a smaller-id collider hub.
-
-    Fix, preserving the star/no-window scale shape: edges that FAIL
-    verification are regrouped BY their hub, a retry hub = min(member) is
-    elected among each hub's failed members, and the retry star is
-    verified once more. The retry frame is O(rejects) — rejects are rare
-    (random-pair agreement ~0.06 vs the 0.5 threshold, so only collider
-    edges land here) — and the whole pass is two joins + one partial
-    aggregation, no window, no pair enumeration. A bucket with TWO
-    foreign colliders below every true id can still orphan a pair
-    (probability squared per bucket). Measured at 2.4M images: this pass
-    recovers 2 of the 10 split truth clusters (BENCH.md); the remaining
-    8 share 4-12 bands each yet lose every one to multi-collider
-    buckets — see verify_edges_retry_pairs for the bounded complete fix.
-    """
-    # score ONCE and pin (DISK_ONLY, same heap-headroom discipline as
-    # verify_edges_retry_pairs): the verified frame feeds three lineage
-    # branches (failed split, retry guard anti-join, final union) — an
-    # anti-join formulation over an unpinned verify_edges re-derives the
-    # edges x signatures scoring join through every branch
-    scored = score_edges(edges, sig_df, cfg, id_col=id_col).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
-    passing = F.col("est_jaccard") >= cfg.min_signature_agreement
-    verified = scored.filter(passing).select(
-        "src", "dst", "est_jaccard", "phash_hamming"
-    )
-    failed = scored.filter(~passing).select("src", "dst")
-    retry_hub = failed.groupBy("src").agg(
-        F.min("dst").alias("_h2"), F.count("*").alias("_fn")
-    )
-    retry = (
-        failed.join(retry_hub.filter(F.col("_fn") >= 2), "src")
-        .filter(F.col("dst") != F.col("_h2"))
-        .select(F.col("_h2").alias("src"), "dst")
-        # two hubs sharing failed members can emit the same retry edge
-        .distinct()
-        # an edge verified via another bucket must not be re-emitted —
-        # without this, the returned frame can hold the same unordered
-        # pair twice. Orientations differ across sources: pipeline star
-        # edges are hub->member in xxhash64-surrogate order
-        # (candidate_edges_compact), while retry edges are min-string-id
-        # -> member by construction — so the guard must compare in a
-        # canonical orientation, not raw (src, dst).
-        .join(
-            verified.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        # tiny frame (O(rejects)); pin it so the isEmpty probe below and
-        # the retry verification don't re-run the anti-join pipeline
-        .localCheckpoint(eager=True)
-    )
-    if retry.isEmpty():
-        return verified
-    return verified.unionByName(verify_edges(retry, sig_df, cfg, id_col=id_col))
-
-
-def verify_edges_retry_pairs(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Star verification with a COMPLETE bounded retry over its rejects.
-
-    verify_edges_rehub's single hub re-election still orphans a true pair
-    when two or more foreign colliders sit below it in the bucket's id
-    order. This is not rare at scale: minhash values CONCENTRATE (random
-    images share ~6% of signature positions through common shingles), so
-    popular 4-value slices recur across dozens of images — the occupancy
-    probe at 2.4M found the 8 rehub-surviving split pairs sitting in
-    buckets of 3-69 same-slice, mutually-dissimilar members in EVERY one
-    of their 4-12 shared bands, with the best true member ranked as low
-    as 40th by id. Hub election loses all of them; probability of that
-    grows with occupancy, i.e. with n — the measured superlinear split
-    growth (0 -> 10 -> 137 at 600k/2.4M/4.8M). This variant terminates
-    in exactly TWO verification passes and recovers every true pair that
-    reached a bucket together:
-
-    - Failed (hub, member) edges are grouped by hub. Groups whose TOTAL
-      member count (passed + failed — a true pair can sit pass/fail
-      asymmetric when est_jaccard is non-transitive through the hub:
-      J(H,m1)=0.52 passes, J(H,m2)=0.45 fails, J(m1,m2)=0.7; pairing
-      only failed members would never retry it) is
-      2..retry_allpairs_max enumerate every failed x any pair
-      (bounded by g(g-1)/2 <= ~8k at the default bound of 128, covering
-      every occupancy observed at 4.8M), pre-filtered by phash hamming
-      (<= retry_phash_max_hamming) INSIDE the self-join stage — any true
-      pair among the rejects is verified DIRECTLY, no election luck.
-    - Larger groups fall back to one min-id re-election over the failed
-      members, keeping the pass linear. Such groups are hot-key
-      shrapnel the salting/cap valves already bound; documented
-      residual: a true pair inside one with two colliders below it and
-      no other shared band.
-
-    Cost model: most multi-member buckets are pure collider groups whose
-    star edges ALL fail (600k measured: 3.36M of 3.46M star edges
-    reject), so the naive retry enumerates sum C(g,2) pairs — 27.98M at
-    600k, 8x the candidate count and growing with occupancy. The phash
-    gate collapses that inside the join stage (random colliders sit at
-    ~32/64 bits vs 0-2 for true near-dups; P(pass) ~ 3e-5) so only
-    ~true-pair volume (85k at 600k) reaches scoring or any exchange.
-    Edges are scored ONCE and pinned; pass/fail split by filter (an
-    anti-join formulation re-derives the big scoring join through every
-    branch of the lineage). The pass adds three shuffles over the reject
-    frame and one extra scan of sig_df for the retry scoring
-    (broadcast-joined against the small retry side by AQE).
-
-    Residual recall gap, both documented and phash-bounded: a true pair
-    whose phash hamming exceeds retry_phash_max_hamming is recoverable
-    only by winning a hub election somewhere (PSNR >= 40 dB re-encodes
-    measure 0-2 bits apart — 16 is ~8 sigma of slack).
-    """
-    # DISK_ONLY: at 2.4M images the scored frame is ~1 GB — parking it
-    # on-heap shaves exactly the headroom the byte-bearing scans need
-    # (GCLocker contiguous-allocation deaths on the 16 GB local heap);
-    # with RAM-backed local dirs "disk" is still memory, just off-heap
-    scored = score_edges(
-        edges, sig_df, cfg, id_col=id_col, _keep_member_phash=True
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    passing = F.col("est_jaccard") >= cfg.min_signature_agreement
-    verified = scored.filter(passing).select(
-        "src", "dst", "est_jaccard", "phash_hamming"
-    )
-    failed = scored.filter(~passing).select("src", "dst", "ph_b")
-    # group-size bound on the TOTAL bucket-group membership (passed +
-    # failed), since the enumeration below pairs failed members against
-    # ALL members of the group
-    sized = failed.join(
-        scored.groupBy("src").agg(F.count("*").alias("_fn")), "src"
-    )
-    small = sized.filter(
-        (F.col("_fn") >= 2) & (F.col("_fn") <= cfg.retry_allpairs_max)
-    )
-    all_small = (
-        scored.select(
-            "src",
-            F.col("dst").alias("m2"),
-            F.col("ph_b").alias("p2"),
-            passing.alias("_pass2"),
-        )
-        # inner-joined on hub below, so only hubs with a small failed
-        # group contribute; no size filter needed on this side
-    )
-    # the phash-hamming filter runs INSIDE the self-join stage, so the
-    # quadratic enumeration never crosses a shuffle boundary — measured
-    # at 600k it collapses 27.98M enumerated pairs to ~85k. Each
-    # unordered pair is enumerated exactly once: failed x failed only in
-    # m1 < m2 orientation; failed x passed from the failed side alone
-    # (passed members never appear on the left).
-    member_pairs = (
-        small.select("src", F.col("dst").alias("m1"), F.col("ph_b").alias("p1"))
-        .join(all_small, "src")
-        .filter(
-            (F.col("m1") != F.col("m2"))
-            & ((F.col("m1") < F.col("m2")) | F.col("_pass2"))
-        )
-        .filter(
-            F.bit_count(F.col("p1").bitwiseXOR(F.col("p2")))
-            <= cfg.retry_phash_max_hamming
-        )
-        .select(
-            F.least("m1", "m2").alias("src"),
-            F.greatest("m1", "m2").alias("dst"),
-        )
-    )
-    big = sized.filter(F.col("_fn") > cfg.retry_allpairs_max)
-    big_hub = big.groupBy("src").agg(F.min("dst").alias("_h2"))
-    big_star = (
-        big.join(big_hub, "src")
-        .filter(F.col("dst") != F.col("_h2"))
-        .select(F.col("_h2").alias("src"), "dst")
-    )
-    retry = (
-        member_pairs.unionByName(big_star)
-        .distinct()
-        # an edge verified via another bucket must not be re-emitted.
-        # Retry edges are min-string-id ordered by construction
-        # (member_pairs: m1 < m2; big_star: hub = min(dst)), but the
-        # verified star edges arrive hub->member in xxhash64-surrogate
-        # order (candidate_edges_compact) — compare canonically or the
-        # same unordered pair slips through reversed and is emitted twice.
-        .join(
-            verified.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        # tiny frame (O(rejects)); pin it so the isEmpty probe and the
-        # retry verification don't re-run the anti-join pipeline
-        .localCheckpoint(eager=True)
-    )
-    if retry.isEmpty():
-        return verified
-    return verified.unionByName(verify_edges(retry, sig_df, cfg, id_col=id_col))

@@ -1687,8 +1687,9 @@ FROM labels
 # ANN with (nbits=2, n_tables=16): measured recall 1.0 vs the exact top-k
 # on this corpus (max pairwise cosine ~= 0.51 => wide-margin neighbors), so
 # exact-kNN SQL is a true oracle for the approximate operator here
-# (tests/test_oracle_guard.py re-measures the recall so a corpus/config
-# drift fails with a number, not an opaque hash mismatch). The SQL is a
+# (tests/test_round3_ops.py::test_recall_guard_emb_ann_topk re-measures
+# the recall so a corpus/config drift fails with a number, not an opaque
+# hash mismatch). The SQL is a
 # standalone string — textually distinct from SQL_EMB_KNN — so nothing in
 # the driver can key/dedup the two entries together.
 def q_emb_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1939,7 +1940,9 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 # dropped entries 51-52) — fail loudly at import instead of silently
 # losing coverage for a 51st entry. Merge new checks into existing
 # entries (the mm_exif_audio_meta / emb_ivf_cells_probe pattern).
-assert len(REGISTRY) <= 50, (
-    f"REGISTRY has {len(REGISTRY)} entries; the driver records only 50 "
-    "correctness rows — merge the new check into an existing entry"
-)
+# A raise, not an assert: `python -O` strips asserts.
+if len(REGISTRY) > 50:
+    raise RuntimeError(
+        f"REGISTRY has {len(REGISTRY)} entries; only 50 are recorded as "
+        "correctness rows — merge the new check into an existing entry"
+    )

@@ -39,6 +39,9 @@ class StageStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # stages this store object resolved through read_or_compute, in
+        # call order — a reused root also holds other runs' stages
+        self.touched: list[str] = []
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -64,7 +67,14 @@ class StageStore:
 
         flock is per-open-file and released on close, so a crashed
         holder never wedges the store; lock scope is the manifest swap
-        only (milliseconds), never a data write."""
+        only (milliseconds), never a data write.
+
+        Shared-filesystem caveat: the lock only excludes processes that
+        see the same advisory locks. Across hosts that needs a filesystem
+        whose flock works across clients (e.g. NFSv4); where flock is
+        local to each host (an NFS mount with local_lock=flock or
+        local_lock=all, some FUSE filesystems) two jobs on different hosts
+        can both take it and lose each other's manifest entries."""
         with open(self._manifest_path + ".lock", "w") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
             try:
@@ -161,6 +171,7 @@ class StageStore:
         self, stage: str, compute, materialize_first: bool = False
     ) -> DataFrame:
         """Resume point: reuse the committed snapshot, else compute+commit."""
+        self.touched.append(stage)
         if self.is_committed(stage):
             return self.read(stage)
         return self.write(

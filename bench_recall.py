@@ -123,6 +123,28 @@ def caption_recall(spark, images, p, workdir: str) -> dict:
     }
 
 
+def max_band_key_population(store, cfg) -> int:
+    """Largest (band, key) population among the exact-dedup
+    representatives of a finished run — the figure max_pairs_per_band
+    caps. Runs outside the timed pipeline wall."""
+    from pyspark.sql import functions as F
+
+    from arhivum_spark.operators.lsh import band_keys
+
+    reps = store.read("s2_exact").filter(~F.col("is_duplicate"))
+    sigs = store.read("s1_signatures").join(
+        reps.select("image_id"), "image_id", "left_semi"
+    )
+    top = (
+        band_keys(sigs, cfg)
+        .groupBy("band", "key")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
+    )
+    return int(top or 0)
+
+
 def main() -> None:
     import bench_scaling
     from arhivum_spark import datagen
@@ -175,20 +197,20 @@ def main() -> None:
     stage_root = os.path.join(WORKDIR, "stages_recall")
     shutil.rmtree(stage_root, ignore_errors=True)
     t0 = time.time()
-    # SPARK_GRAFT_RECALL_CAP: override max_pairs_per_band. Kept for cap
-    # attribution experiments; NOTE the split-cluster mechanism turned
-    # out to be hub election in same-slice collider buckets, not the
-    # caps (occupancy probe + lsh.verify_edges_retry_pairs, BENCH.md
-    # round 5 — splits 0/10/137 -> 0 at the default cap).
+    # SPARK_GRAFT_RECALL_CAP: override max_pairs_per_band (cap
+    # attribution experiments; the result reports the cap's headroom as
+    # max_band_key_population)
     cap_env = os.environ.get("SPARK_GRAFT_RECALL_CAP")
     cfg = (
         DedupConfig(max_pairs_per_band=int(cap_env))
         if cap_env
         else DedupConfig()
     )
-    out = run_pipeline(images, StageStore(spark, stage_root), cfg)
+    store = StageStore(spark, stage_root)
+    out = run_pipeline(images, store, cfg)
     pred = out.select("image_id", "cluster_id").toPandas()
     wall = time.time() - t0
+    max_pop = max_band_key_population(store, cfg)
     shutil.rmtree(stage_root, ignore_errors=True)
     n_clusters = pred["cluster_id"].nunique()
     spark.stop()
@@ -241,6 +263,7 @@ def main() -> None:
         "n_images": N_IMAGES,
         "cores": CORES,
         "max_pairs_per_band": cfg.max_pairs_per_band,
+        "max_band_key_population": max_pop,
         "truth_rows": int(len(truth)),
         "truth_pairs": total,
         "recall": round(recall, 6),

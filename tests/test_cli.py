@@ -73,6 +73,30 @@ def test_cli_config_overrides(spark, tmp_path):
     assert "s3b_psnr" not in m["stage_seconds"]
 
 
+def test_cli_stage_seconds_skip_stale_manifest_entries(spark, tmp_path):
+    """A reused --stage-dir keeps stages an earlier, differently
+    configured run committed; stage_seconds reports only the stages this
+    run's pipeline resolved."""
+    from arhivum_spark.sources.checkpoints import StageStore
+
+    tmp = str(tmp_path)
+    params = datagen.GenParams(n=120, seed=5, img_hw=48)
+    datagen.images_df(spark, params, partitions=4).write.parquet(
+        os.path.join(tmp, "images")
+    )
+    # an earlier run with PSNR verification on, and a stage no current
+    # pipeline has
+    stale = StageStore(spark, os.path.join(tmp, "stages"))
+    stale.write("s3b_psnr", spark.range(3))
+    stale.write("s9_retired", spark.range(3))
+
+    m = run(_argv(tmp, extra=["--no-psnr-verify"]), spark=spark)
+    assert set(m["stage_seconds"]) == {
+        "s1_signatures", "s2_exact", "s3_candidates", "s4_clusters",
+        "s5_captions",
+    }
+
+
 def test_cli_via_real_spark_submit(spark, tmp_path):
     """Launch-shape evidence for the north rule: the ACTUAL spark-submit
     binary with --py-files <zip of the package>, a fresh JVM/driver, no

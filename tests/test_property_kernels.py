@@ -175,6 +175,71 @@ def test_star_cc_equals_union_find(edges):
 
 
 # ---------------------------------------------------------------------------
+# LSH bucket-verify kernel vs brute-force union-find over verified pairs
+
+buckets = st.lists(
+    # one bucket: members' 8-position signatures over a 2-symbol alphabet,
+    # so pair agreement spans the whole [0, 1] range
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=1), min_size=8, max_size=8),
+        min_size=1,
+        max_size=9,
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(buckets, st.sampled_from([0.25, 0.5, 0.625, 0.875, 1.0]))
+def test_spanning_forest_equals_union_find(bucket_sigs, threshold):
+    """lsh.spanning_forest on a batch of random small buckets: every
+    emitted edge verifies on its own pair, stays inside one bucket in id
+    order, and the forest's components equal a brute-force union-find
+    over ALL verified pairs of each bucket, with no redundant edge."""
+    from arhivum_spark.operators.lsh import spanning_forest
+
+    sizes = [len(b) for b in bucket_sigs]
+    offs = np.concatenate(([0], np.cumsum(sizes)))
+    sig = np.array([m for b in bucket_sigs for m in b], dtype=np.int32)
+    i, j, est = spanning_forest(offs, sig, threshold)
+
+    def agree(a, b):
+        return float(np.mean(sig[a] == sig[b]))
+
+    def components(n, pairs):
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            parent[find(a)] = find(b)
+        return [find(x) for x in range(n)]
+
+    assert all(e == agree(a, b) >= threshold for a, b, e in zip(i, j, est))
+    assert len({(a, b) for a, b in zip(i, j)}) == len(i)
+    for lo, hi in zip(offs[:-1], offs[1:]):
+        mine = (i >= lo) & (i < hi)
+        assert ((j[mine] > i[mine]) & (j[mine] < hi)).all()
+        n = hi - lo
+        verified = [
+            (a, b)
+            for a in range(n)
+            for b in range(a + 1, n)
+            if agree(lo + a, lo + b) >= threshold
+        ]
+        ref = components(n, verified)
+        got = components(n, list(zip(i[mine] - lo, j[mine] - lo)))
+        # same partition, and a forest: one edge per merge
+        assert len(set(zip(ref, got))) == len(set(ref)) == len(set(got))
+        assert mine.sum() == n - len(set(ref))
+
+
+# ---------------------------------------------------------------------------
 # Suffix array kernels vs naive oracles (arbitrary small inputs)
 
 byte_strings = st.lists(

@@ -9,8 +9,8 @@
 2. The DuckDB oracle tokenizer (queries._TOKS_SQL) implements the same
    contract, so oracle parity holds on corpora the driver could ever
    grow whitespace into.
-3. _cap_buckets fast path (ADVICE): both paths drop singleton buckets
-   and feed identical candidate frames.
+3. The LSH bucket-verify core links every pair that verifies inside a
+   bucket, whichever member holds the smallest id.
 4. q_st_first_wins with spark.arhivum.scratchDir set (ADVICE medium):
    re-invocable in one process, fresh staging root each time — no
    makedirs crash, no stale-row accumulation in the append-mode sink.
@@ -18,6 +18,7 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 
@@ -154,33 +155,6 @@ def test_substring_pairs_whitespace_captions_definitional_oracle(spark):
     }
     assert got == truth
     assert (1, 0) in truth and (2, 1) in truth  # the cases that regressed
-
-
-def test_cap_buckets_fast_path_drops_singletons(spark):
-    """ADVICE fix: the un-skewed fast path must feed the SAME candidate
-    frame as the skewed path — singleton buckets dropped, no _bn column
-    leaked."""
-    from arhivum_spark.operators.embeddings import _cap_buckets
-
-    rows = (
-        [(0, 7, i) for i in range(3)]     # bucket of 3
-        + [(0, 8, 10), (0, 8, 11)]        # bucket of 2
-        + [(0, 9, 20), (1, 7, 21)]        # two singletons
-    )
-    bucketed = spark.createDataFrame(
-        rows, schema="table int, bucket int, _cid long"
-    )
-    out = _cap_buckets(bucketed, cap=100)  # max bucket 3 <= cap: fast path
-    assert "_bn" not in out.columns
-    got = {(r["table"], r["bucket"], r["_cid"]) for r in out.collect()}
-    assert got == {(t, b, c) for t, b, c in rows if (t, b) != (0, 9) and (t, b) != (1, 7)}
-
-    skew = _cap_buckets(bucketed, cap=2)  # bucket (0,7) over cap: skew path
-    kept = {(r["table"], r["bucket"], r["_cid"]) for r in skew.drop("_bn").collect()}
-    # singletons dropped on this path too; hot bucket down-sampled to <= cap
-    assert all((t, b) not in {(0, 9), (1, 7)} for t, b, _ in kept)
-    hot = [r for r in kept if (r[0], r[1]) == (0, 7)]
-    assert 1 <= len(hot) <= 2
 
 
 def test_st_first_wins_scratch_dir_reinvocable(spark, tmp_path):
@@ -335,157 +309,136 @@ def _sig_rows(spark, agreements):
     )
 
 
-def test_verify_edges_rehub_recovers_foreign_hub_orphans(spark):
-    """The measured 2.4M/4.8M split-cluster mechanism (BENCH.md round 5):
-    a foreign one-band collider with the bucket's MIN id is elected hub,
-    both (hub, true-member) star edges fail signature verification, and
-    the true pair — present in the bucket! — loses its connectivity.
-    verify_edges_rehub must re-elect a hub among the rejects and recover
-    the pair; plain verify_edges documents the failure."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_rehub
+_K = DedupConfig().num_perm
+_BASE = list(range(_K))
 
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    # true pair: 100/128 agreement (>= 0.5); collider: 8/128 with both
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    collider = base[:8] + [2000 + i for i in range(k - 8)]
-    sigs = _sig_rows(
-        spark, {"img-a": collider, "img-b": base, "img-c": reenc}
+
+def _foreign(tag: int, n: int = _K) -> list[int]:
+    return [tag * 1000 + i for i in range(n)]
+
+
+# Each case: {id: minhash} and the exact edge list the core must emit.
+# Members sharing a band land in one bucket; ids order the members.
+_CORE_CASES = {
+    # hub-free: the bucket's min id is a true member
+    "clean_bucket": (
+        {
+            "img-a": _BASE,
+            "img-b": _BASE[:90] + _foreign(3, _K - 90),
+            "img-d": _BASE[:4] + _foreign(4, _K - 4),
+        },
+        [("img-a", "img-b")],
+    ),
+    # three mutually verifying members (plus a band-0 collider): a
+    # forest of two edges from the min id, never the third verified pair
+    "clean_triple_emits_forest": (
+        {
+            "img-a": _BASE,
+            "img-b": _BASE[:120] + _foreign(3, _K - 120),
+            "img-c": _BASE[:108] + _foreign(4, _K - 108),
+            "img-d": _BASE[:4] + _foreign(5, _K - 4),
+        },
+        [("img-a", "img-b"), ("img-a", "img-c")],
+    ),
+    # the true pair (b, c) shares one band only, and a foreign collider
+    # holding the min id sits in that bucket: nothing else links them
+    "pair_only_in_collider_bucket": (
+        {
+            "img-a": _BASE[:4] + _foreign(2, _K - 4),
+            "img-b": _BASE,
+            # c keeps band 0 and 3 of 4 positions of every later band
+            "img-c": [x if x < 4 or x % 4 else 1000 + x for x in _BASE],
+        },
+        [("img-b", "img-c")],
+    ),
+    # a foreign two-band collider holds the min id of bucket {a, b, c}:
+    # both (a, b) and (a, c) fail, yet the true pair (b, c), which also
+    # verifies in its own buckets, links and is emitted once
+    "foreign_min_id_collider": (
+        {
+            "img-a": _BASE[:8] + _foreign(2, _K - 8),
+            "img-b": _BASE,
+            "img-c": _BASE[:100] + _foreign(1, _K - 100),
+        },
+        [("img-b", "img-c")],
+    ),
+    # two colliders below the pair in id order
+    "two_colliders_below_pair": (
+        {
+            "img-a1": _BASE[:4] + _foreign(2, _K - 4),
+            "img-a2": _BASE[:4] + _foreign(3, _K - 4),
+            "img-b": _BASE,
+            "img-c": _BASE[:100] + _foreign(1, _K - 100),
+        },
+        [("img-b", "img-c")],
+    ),
+    # est_jaccard is not transitive: J(h, m1) = 0.5 passes, J(h, m2) =
+    # 0.25 fails, J(m1, m2) = 0.75 passes — m2 must join through m1
+    "pass_fail_asymmetry": (
+        {
+            "img-h": _BASE[: _K // 2] + _foreign(6, _K - _K // 2),
+            "img-m1": _BASE,
+            "img-m2": _foreign(7, _K // 4) + _BASE[_K // 4:],
+        },
+        [("img-h", "img-m1"), ("img-m1", "img-m2")],
+    ),
+    # (b, c) verifies in 25 band buckets and sits beside a collider in
+    # one of them: it is emitted once, in id order
+    "reversed_orientation_duplicates": (
+        {
+            "img-b": _BASE,
+            "img-c": _BASE[:100] + _foreign(1, _K - 100),
+            "img-z": _BASE[:4] + _foreign(5, _K - 4),
+        },
+        [("img-b", "img-c")],
+    ),
+}
+
+
+def _core_edges(spark, sigs, cfg=DedupConfig()):
+    from arhivum_spark.operators.lsh import candidate_edges_compact, verify_buckets
+
+    return verify_buckets(candidate_edges_compact(sigs, cfg), cfg).collect()
+
+
+@pytest.mark.parametrize("case", sorted(_CORE_CASES))
+def test_bucket_forest_links_verified_pairs(spark, case):
+    """The bucket-verify core (lsh.candidate_edges_compact +
+    verify_buckets) links every pair that verifies inside a bucket,
+    whichever member has the smallest id, emits each edge once in id
+    order, and scores each edge on its own pair."""
+    agreements, expected = _CORE_CASES[case]
+    rows = _core_edges(spark, _sig_rows(spark, agreements))
+    assert sorted((r.src, r.dst) for r in rows) == expected
+    assert len(rows) == len(expected)
+    for r in rows:
+        direct = sum(
+            x == y for x, y in zip(agreements[r.src], agreements[r.dst])
+        ) / _K
+        assert r.est_jaccard == direct >= DedupConfig().min_signature_agreement
+
+
+def test_bucket_forest_links_black_cohort_across_phash_distance(spark):
+    """Distinct all-black contents sit 30-34 pHash bits apart yet agree on
+    >= half their MinHash positions: the core verifies on est_jaccard
+    alone, so they must link (a pHash gate would split the cohort)."""
+    agreements = {
+        "img-k1": _BASE,
+        "img-k2": _BASE[:80] + _foreign(8, _K - 80),
+        "img-k3": _foreign(9, _K - 72) + _BASE[_K - 72:],
+    }
+    phash = {"img-k1": 0, "img-k2": (1 << 32) - 1, "img-k3": -(1 << 32)}
+    sigs = spark.createDataFrame(
+        [(k, mh, phash[k]) for k, mh in agreements.items()],
+        "image_id string, minhash array<int>, phash long",
     )
-    # star edges of bucket {a, b, c} with hub = min id = the collider
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-c")], "src string, dst string"
-    )
-
-    plain = verify_edges(edges, sigs, cfg)
-    assert plain.count() == 0  # the failure mode: true pair orphaned
-
-    got = verify_edges_rehub(edges, sigs, cfg)
-    pairs = {(r.src, r.dst) for r in got.collect()}
-    assert pairs == {("img-b", "img-c")}
-
-
-def test_verify_edges_rehub_is_identity_on_clean_buckets(spark):
-    """When the hub itself is a true member (the overwhelmingly common
-    case) the rehub pass must add nothing and keep verify_edges'
-    output — same rows, same columns."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_rehub
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    near = base[:90] + [3000 + i for i in range(k - 90)]
-    far = [4000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-a": base, "img-b": near, "img-d": far})
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-d")], "src string, dst string"
-    )
-    plain = sorted(verify_edges(edges, sigs, cfg).collect())
-    rehub = sorted(verify_edges_rehub(edges, sigs, cfg).collect())
-    assert plain == rehub
-    assert [(r.src, r.dst) for r in plain] == [("img-a", "img-b")]
-
-
-def test_verify_edges_retry_pairs_recovers_multi_collider_bucket(spark):
-    """Two foreign colliders below the true pair in id order: the first
-    election picks collider-1, the rehub re-election picks collider-2,
-    and the pair stays orphaned (the measured residual at 2.4M — 8 of 10
-    splits survived rehub). retry_pairs enumerates all pairs among the
-    failed members, so the true pair is verified DIRECTLY."""
-    from arhivum_spark.operators.lsh import (
-        verify_edges_rehub,
-        verify_edges_retry_pairs,
-    )
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    coll1 = [2000 + i for i in range(k)]
-    coll2 = [3000 + i for i in range(k)]
-    sigs = _sig_rows(
-        spark,
-        {"img-a1": coll1, "img-a2": coll2, "img-b": base, "img-c": reenc},
-    )
-    # star of bucket {a1, a2, b, c}, hub = min id = collider a1
-    edges = spark.createDataFrame(
-        [("img-a1", "img-a2"), ("img-a1", "img-b"), ("img-a1", "img-c")],
-        "src string, dst string",
-    )
-
-    rehub = verify_edges_rehub(edges, sigs, cfg)
-    assert rehub.count() == 0  # re-elected hub a2 is ALSO foreign
-
-    got = verify_edges_retry_pairs(edges, sigs, cfg)
-    assert {(r.src, r.dst) for r in got.collect()} == {("img-b", "img-c")}
-
-
-def test_verify_edges_retry_pairs_identity_on_clean_and_no_dup_edges(spark):
-    """Clean buckets: identical output to verify_edges. And an edge that
-    verifies in one bucket must not be duplicated by another bucket's
-    retry (the anti-join guard)."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_retry_pairs
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    near = base[:90] + [3000 + i for i in range(k - 90)]
-    far = [4000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-a": base, "img-b": near, "img-d": far})
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-d")], "src string, dst string"
-    )
-    plain = sorted(verify_edges(edges, sigs, cfg).collect())
-    got = sorted(verify_edges_retry_pairs(edges, sigs, cfg).collect())
-    assert plain == got
-    assert [(r.src, r.dst) for r in plain] == [("img-a", "img-b")]
-
-    # second bucket whose star (with foreign hub img-z) fails both edges;
-    # its all-pairs retry re-derives (img-a, img-b) — already verified via
-    # the first bucket, so the union must contain it exactly once
-    foreign = [5000 + i for i in range(k)]
-    sigs2 = _sig_rows(
-        spark, {"img-a": base, "img-b": near, "img-z": foreign}
-    )
-    edges2 = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-z", "img-a"), ("img-z", "img-b")],
-        "src string, dst string",
-    )
-    out = verify_edges_retry_pairs(edges2, sigs2, cfg).collect()
-    assert [(r.src, r.dst) for r in out] == [("img-a", "img-b")]
-
-
-def test_retry_guards_are_orientation_blind(spark):
-    """Pipeline star edges arrive hub->member in xxhash64-SURROGATE order
-    (candidate_edges_compact), so a verified edge's (src, dst) is reversed
-    relative to string order for ~half of all pairs; retry edges are
-    min-STRING-id ordered by construction. The already-verified anti-join
-    guard must therefore compare canonically — with a raw (src, dst)
-    compare, a pair verified as (c, b) re-enters via a collider bucket's
-    retry as (b, c) and the output holds the same unordered pair twice
-    (double PSNR decode downstream, duplicate s3 snapshot rows)."""
-    from arhivum_spark.operators.lsh import (
-        verify_edges_rehub,
-        verify_edges_retry_pairs,
-    )
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    foreign = [5000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-b": base, "img-c": reenc, "img-z": foreign})
-    # (img-c, img-b): verified edge in REVERSED string order (hash-order
-    # hub election); plus a collider bucket whose star fails both edges
-    # and whose retry re-derives the pair string-ordered as (img-b, img-c)
-    edges = spark.createDataFrame(
-        [("img-c", "img-b"), ("img-z", "img-b"), ("img-z", "img-c")],
-        "src string, dst string",
-    )
-    for fn in (verify_edges_retry_pairs, verify_edges_rehub):
-        out = [(r.src, r.dst) for r in fn(edges, sigs, cfg).collect()]
-        assert out == [("img-c", "img-b")], fn.__name__
+    for a, b in itertools.combinations(phash, 2):
+        assert bin((phash[a] ^ phash[b]) & (2**64 - 1)).count("1") >= 30
+    rows = _core_edges(spark, sigs)
+    # k1-k2 0.625, k1-k3 0.5625, k2-k3 0.1875: one tree of two edges
+    assert sorted((r.src, r.dst) for r in rows) == [
+        ("img-k1", "img-k2"), ("img-k1", "img-k3"),
+    ]
 
 
 def test_prune_does_not_clobber_concurrent_commit(spark, tmp_path):
@@ -611,39 +564,6 @@ def test_band_keys_are_64bit_and_slice_determined(spark):
     assert len(set(k2)) == len(k2)
 
 
-def test_verify_edges_retry_pairs_phash_gate(spark):
-    """The retry's quadratic enumeration is collapsed by a phash-hamming
-    pre-filter (config.retry_phash_max_hamming): a signature-agreeing
-    pair with DISTANT phashes is not recovered via retry (documented
-    residual — impossible for PSNR>=40 near-dups, which measure 0-2
-    bits), while the same pair with close phashes is."""
-    from arhivum_spark.operators.lsh import verify_edges_retry_pairs
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    coll = [2000 + i for i in range(k)]
-
-    def run(ph_b, ph_c):
-        sigs = spark.createDataFrame(
-            [("img-a", coll, 7), ("img-b", base, ph_b), ("img-c", reenc, ph_c)],
-            "image_id string, minhash array<int>, phash long",
-        )
-        edges = spark.createDataFrame(
-            [("img-a", "img-b"), ("img-a", "img-c")], "src string, dst string"
-        )
-        return {
-            (r.src, r.dst)
-            for r in verify_edges_retry_pairs(edges, sigs, cfg).collect()
-        }
-
-    # close phashes (hamming 1): recovered
-    assert run(0, 1) == {("img-b", "img-c")}
-    # distant phashes (hamming 64): gated out of the retry
-    assert run(0, -1) == set()
-
-
 def test_session_disables_parquet_vectored_io(spark):
     """Round-5 regression (scale cliff #4, BENCH.md): parquet 1.16's
     Hadoop vectored IO allocates one on-heap ByteBuffer per COLUMN CHUNK
@@ -705,29 +625,6 @@ def test_psnr_inflight_batching_matches_single_shot(spark):
         psnr_verify_edges(edges, images, DedupConfig(psnr_max_inflight_edges=0))
 
 
-def test_verify_edges_rehub_no_duplicate_edges(spark):
-    """An edge verified via one bucket must not be re-emitted by another
-    bucket's retry pass: bucket {b, c} verifies (b, c) directly, while
-    collider bucket {a, b, c} rejects both star edges and re-elects
-    hub b — its retry edge (b, c) must be suppressed, not duplicated."""
-    from arhivum_spark.operators.lsh import verify_edges_rehub
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    collider = base[:8] + [2000 + i for i in range(k - 8)]
-    sigs = _sig_rows(
-        spark, {"img-a": collider, "img-b": base, "img-c": reenc}
-    )
-    edges = spark.createDataFrame(
-        [("img-b", "img-c"), ("img-a", "img-b"), ("img-a", "img-c")],
-        "src string, dst string",
-    )
-    rows = verify_edges_rehub(edges, sigs, cfg).collect()
-    assert [(r.src, r.dst) for r in rows] == [("img-b", "img-c")]
-
-
 def test_required_java_opts_survive_caller_extra_conf():
     """extra_conf supplying its own extraJavaOptions must not silently
     drop the GCLocker workaround (BENCH.md cliff #4) — the flags merge,
@@ -745,42 +642,8 @@ def test_required_java_opts_survive_caller_extra_conf():
 
 
 # ---------------------------------------------------------------------------
-# round-5 close: retry completeness, SHJ fallback plan shape, infra-error
+# round-5 close: SHJ fallback plan shape, infra-error
 # propagation in the PSNR kernel
-
-
-def test_retry_pairs_recovers_pass_fail_asymmetric_pair(spark):
-    """est_jaccard is not transitive through a hub: J(H,m1) can pass the
-    0.5 threshold while J(H,m2) fails it, with J(m1,m2) well above it.
-    A retry that pairs only FAILED members never enumerates (m1, m2) —
-    m2 is alone in its failed group — and the true pair is orphaned if
-    no other band saves it. The retry must pair failed members against
-    ALL members of the hub group (passed included)."""
-    from arhivum_spark.operators.lsh import (
-        verify_edges,
-        verify_edges_retry_pairs,
-    )
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    # m1 = base; H agrees with m1 on exactly half the positions (passes
-    # at >= 0.5); m2 agrees with m1 on 96/128 (passes) but with H on
-    # only 32/128 (fails)
-    hub = base[: k // 2] + [6000 + i for i in range(k - k // 2)]
-    m2 = [7000 + i for i in range(k // 4)] + base[k // 4:]
-    sigs = _sig_rows(spark, {"img-h": hub, "img-m1": base, "img-m2": m2})
-    edges = spark.createDataFrame(
-        [("img-h", "img-m1"), ("img-h", "img-m2")], "src string, dst string"
-    )
-    plain = {(r.src, r.dst) for r in verify_edges(edges, sigs, cfg).collect()}
-    assert plain == {("img-h", "img-m1")}  # m2 orphaned without the fix
-
-    got = {
-        (r.src, r.dst)
-        for r in verify_edges_retry_pairs(edges, sigs, cfg).collect()
-    }
-    assert got == {("img-h", "img-m1"), ("img-m1", "img-m2")}
 
 
 def test_psnr_fallback_join_is_shuffle_hash(spark):
@@ -1253,6 +1116,7 @@ def test_base_identifier_strips_only_trailing_segment(spark):
             ("com.example:api:client:2.0",),
             ("name:1.0",),
             ("noversion",),
+            (":abc",),
         ],
         "ident string",
     )
@@ -1260,9 +1124,11 @@ def test_base_identifier_strips_only_trailing_segment(spark):
         r["b"] for r in df.select(base_identifier("ident").alias("b")).collect()
     ]
     # 4-segment idents keep their 3rd segment (previously both collapsed
-    # to 'com.example:api' — spurious same-base duplicate candidates)
+    # to 'com.example:api' — spurious same-base duplicate candidates); a
+    # leading-colon id is unchanged (the reference's lastColon > 0 guard)
     assert got == [
-        "com.example:api:core", "com.example:api:client", "name", "noversion"
+        "com.example:api:core", "com.example:api:client", "name",
+        "noversion", ":abc",
     ]
 
 
